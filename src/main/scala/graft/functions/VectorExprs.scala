@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, col, lit}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions for the numeric hot paths.
@@ -489,7 +490,7 @@ object VectorExprs {
       val n = arr.numElements()
       if (n < 2) return new GenericArrayData(Array.empty[Any])
       val elems = arr.toObjectArray(elemType)
-      val out = new Array[Any](n * (n - 1) / 2)
+      val out = new Array[Any](SortedPairs.pairCount(n))
       var k = 0
       var i = 0
       while (i < n - 1) {
@@ -506,6 +507,22 @@ object VectorExprs {
       new GenericArrayData(out)
     }
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  object SortedPairs {
+    /** C(n, 2), the output length for an n-element input. Computed as a
+      * Long (Int arithmetic overflows from n = 46,342); an explicit error
+      * names n once the count exceeds the largest array the JVM can
+      * allocate, which first happens at n = 65,537.
+      */
+    def pairCount(n: Int): Int = {
+      val count = n.toLong * (n - 1) / 2
+      if (count > ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH)
+        throw new IllegalArgumentException(
+          s"graft_sorted_pairs: an array of $n elements has $count pairs, more than the " +
+            s"${ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH} one array can hold")
+      count.toInt
+    }
   }
 
   def sortedPairs(

@@ -44,17 +44,25 @@ object ExtQueries {
     * The previous gate read `df.rdd.getNumPartitions`, which forces a
     * full physical planning + RDD DAG build of the scan per call site
     * (and reads the pre-AQE count) — all to make a 1-bit decision
-    * (r21 ADVICE). Falls back to `target` (= never widen) when a file's
-    * size is unreadable, the conservative no-shuffle default.
+    * (r21 ADVICE). Files are sized through their Hadoop FileSystem, so
+    * any scheme the session can read (s3a://, hdfs://, …) works. Falls
+    * back to `target` (= never widen), the conservative no-shuffle
+    * default, when any file's size cannot be read.
+    *
+    * `inputFiles` is a distinct set: a file that both branches of a
+    * self-union read is listed — and charged — once, so for inputs like
+    * `corpusNearDups` the estimate is about half the real split count.
     */
-  private def scanPartitionEstimate(spark: SparkSession, df: DataFrame): Long = {
+  private[queries] def scanPartitionEstimate(spark: SparkSession, df: DataFrame): Long = {
     val conf = spark.sessionState.conf
     val openCost = conf.filesOpenCostInBytes
-    val sizes = df.inputFiles.map { f =>
-      val p = java.nio.file.Paths.get(new java.net.URI(f))
-      try java.nio.file.Files.size(p) catch { case _: java.io.IOException => -1L }
-    }
-    if (sizes.isEmpty || sizes.exists(_ < 0)) spark.sparkContext.defaultParallelism.toLong
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val sizes =
+      try df.inputFiles.map { f =>
+        val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
+        p.getFileSystem(hadoopConf).getFileStatus(p).getLen
+      } catch { case scala.util.control.NonFatal(_) => Array.empty[Long] }
+    if (sizes.isEmpty) spark.sparkContext.defaultParallelism.toLong
     else {
       val total = sizes.map(_ + openCost).sum
       val bytesPerCore = total / math.max(1, spark.sparkContext.defaultParallelism)

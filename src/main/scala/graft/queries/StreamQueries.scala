@@ -268,7 +268,7 @@ object StreamQueries {
     val far = new java.sql.Timestamp(maxTs.getTime + 40L * 24 * 3600 * 1000)
     // sentinels staged upfront (same argument as runTwoHopStateful): both
     // watermarks derive from batch 1's max event time, so the NULL-padded
-    // outer rows emit in batch 2 — no second staging pass needed
+    // outer rows emit in batch 2, which the runner's second drain pass sees
     locally {
       import org.apache.spark.sql.Row
       spark
@@ -293,7 +293,6 @@ object StreamQueries {
           col("r.event_id").as("signup_id"),
           col("l.user_id").as("user_id"),
           round(col("l.value"), 4).as("purchase_value")),
-        () => (),
         col("user_id") === -1L,
         wd)
   }
@@ -397,20 +396,16 @@ object StreamQueries {
     val cut = lit("2024-01-15 00:00:00").cast("timestamp")
     events.filter(col("ts") < cut).write.mode("append").parquet(src)
     events.filter(col("ts") >= cut).write.mode("append").parquet(src)
-    val q = spark.readStream
+    val stream = spark.readStream
       .schema(eventsSchemaNoProps)
       .option("maxFilesPerTrigger", "4")
       .parquet(src)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+    StreamJobs.drain(spark, stream, s"$wd/checkpoint")(_.foreachBatch {
+      (batch: DataFrame, _: Long) =>
         table.append(batch)
         view.refresh()
         ()
-      }
-      .option("checkpointLocation", s"$wd/checkpoint")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    })
     view.read()
       .select(
         col("event_type"),

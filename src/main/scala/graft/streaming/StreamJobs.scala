@@ -1,10 +1,11 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Structured Streaming jobs reproducing the reference's two-hop stream
@@ -21,6 +22,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * the same at-least-once replay contract, and the file sink's
   * `_spark_metadata` commit log makes the micro-batch append
   * effectively-once — the reference's Kafka+Iceberg guarantees.
+  *
+  * Every runner starts and drains its query through [[drain]], the one
+  * place that owns the query lifecycle (checkpoint, scoped conf, start,
+  * wait, graceful stop).
   */
 object StreamJobs {
 
@@ -49,22 +54,95 @@ object StreamJobs {
     def load(spark: SparkSession): DataFrame
   }
 
-  /** Save the given session confs, set the overrides, run `body`
-    * (typically a stream `.start()`, which pins them into the query),
-    * and restore — the ONE definition of the scoped-conf contract every
-    * stream start in this file shares, so the restore can never drift
-    * between call sites.
+  /** How [[drain]] waits for its query. */
+  private[graft] sealed trait Wait
+
+  /** `Trigger.AvailableNow`, awaited until the query terminates. */
+  private[graft] case object AvailableNow extends Wait
+
+  /** `processAllAvailable` `n` times, running `between` before every
+    * pass after the first.
     */
-  private def withScopedConf[T](spark: SparkSession, overrides: Seq[(String, String)])(
-      body: => T): T = {
-    val prev = overrides.map { case (k, _) => k -> spark.conf.get(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  private[graft] final case class Passes(n: Int = 1, between: () => Unit = () => ()) extends Wait
+
+  /** Start `stream` with the sink `sink` configures, checkpointed at
+    * `checkpoint`, wait for it as `waitFor` says, and stop it.
+    *
+    * `conf` is set on the session only around `.start()` (which pins it
+    * into the query) and then restored, so overrides never leak to later
+    * caller code — and runners without overrides run their foreachBatch
+    * MERGEs and appends under the unmodified session conf.
+    *
+    * A JVM shutdown (SIGTERM/ctrl-C) while waiting stops the query
+    * cleanly, so the checkpoint commits and the next run resumes where
+    * this one left off — the reference wraps awaitTermination in a
+    * KeyboardInterrupt handler that stops the query (the reference's
+    * src/bronze/_bronze_utils.py:78-84).
+    */
+  private[graft] def drain(
+      spark: SparkSession,
+      stream: DataFrame,
+      checkpoint: String,
+      conf: Seq[(String, String)] = Nil,
+      waitFor: Wait = Passes())(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val writer = sink(stream.writeStream.option("checkpointLocation", checkpoint))
+    val prev = conf.map { case (k, _) => k -> spark.conf.get(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val q =
+      try (if (waitFor == AvailableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+      finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    val hook = new Thread(() => if (q.isActive) q.stop())
+    Runtime.getRuntime.addShutdownHook(hook)
+    try waitFor match {
+      case AvailableNow => q.awaitTermination()
+      case Passes(n, between) =>
+        q.processAllAvailable()
+        (2 to n).foreach { _ => between(); q.processAllAvailable() }
+    } finally {
+      try Runtime.getRuntime.removeShutdownHook(hook)
+      catch { case _: IllegalStateException => () } // already shutting down
+      q.stop()
+    }
   }
 
-  private val rocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  /** State-store count is pinned per query at first start from the
+    * session's shuffle-partition conf. Unlike batch shuffles it should
+    * be sized to stateful-key cardinality, not core count: every
+    * micro-batch pays per-store commit overhead, and 200 default stores
+    * is pure overhead for a handful of keys.
+    */
+  private def shufflePartitions(n: Int) = "spark.sql.shuffle.partitions" -> n.toString
+
+  /** Sentinel-driven flushes emit final windows in a NO-DATA micro-batch
+    * (the watermark advances after the sentinel batch commits). That
+    * batch only runs when noDataMicroBatches is enabled — pin it, don't
+    * assume the session default survived caller config.
+    */
+  private val noDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled" -> "true"
+
+  private def stateStore(provider: String) =
+    "spark.sql.streaming.stateStore.providerClass" -> provider
+
+  private val rocksDb =
+    stateStore("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** [[drain]] into a fresh memory-sink table and return it. Checkpoint
+    * and table are fresh per call: resuming offsets from an earlier
+    * call's checkpoint would silently omit already-processed rows.
+    */
+  private def memorySink(
+      spark: SparkSession,
+      out: DataFrame,
+      workDir: String,
+      tag: String,
+      conf: Seq[(String, String)] = Seq(shufflePartitions(8), noDataBatches),
+      waitFor: Wait = Passes()): DataFrame = {
+    val queryName = s"${tag}_${UUID.randomUUID().toString.replace("-", "")}"
+    drain(spark, out, checkpoint(workDir, tag), conf, waitFor)(
+      _.outputMode("append").format("memory").queryName(queryName))
+    spark.table(queryName)
+  }
 
   /** File-stream envelope source over a staging directory; its
     * offsets-by-file log gives Kafka's at-least-once replay contract.
@@ -144,22 +222,9 @@ object StreamJobs {
     p.toString
   }
 
-  /** Block on a long-running streaming query with a graceful-shutdown
-    * hook (the reference wraps awaitTermination in a KeyboardInterrupt
-    * handler that stops the query —
-    * /root/reference/src/bronze/_bronze_utils.py:78-84): a JVM shutdown
-    * (SIGTERM/ctrl-C) stops the query cleanly so the checkpoint commits
-    * and the next run resumes exactly where it left off.
-    */
-  def awaitWithGracefulShutdown(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val hook = new Thread(() => if (q.isActive) q.stop())
-    Runtime.getRuntime.addShutdownHook(hook)
-    try q.awaitTermination()
-    finally {
-      try Runtime.getRuntime.removeShutdownHook(hook)
-      catch { case _: IllegalStateException => () } // already shutting down
-    }
-  }
+  /** A fresh checkpoint dir for one run of a `tag` query. */
+  private def checkpoint(workDir: String, tag: String): String =
+    dir(workDir, s"checkpoint-$tag-${UUID.randomUUID()}")
 
   /** Append a batch of rows to the staging directory as the
     * (key, value-json) envelope — the test-harness stand-in for the
@@ -193,7 +258,6 @@ object StreamJobs {
       source: Option[EnvelopeSource] = None): String = {
     val stage = dir(workDir, "stage")
     val bronze = dir(workDir, "bronze")
-    val checkpoint = dir(workDir, "checkpoint-ingest")
 
     val envelope = source
       .getOrElse(FileEnvelopeSource(stage, maxFilesPerTrigger))
@@ -203,44 +267,12 @@ object StreamJobs {
       .select(col("data.*"))
     val withParts = graft.operators.Ops.datePartCols(decoded, tsCol)
 
-    val writer = withParts.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", bronze)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-    val q = (if (partitioned) writer.partitionBy("event_year", "event_month", "event_day")
-             else writer).start()
-    q.awaitTermination()
+    drain(spark, withParts, dir(workDir, "checkpoint-ingest"), waitFor = AvailableNow) { w =>
+      val writer = w.outputMode("append").format("parquet").option("path", bronze)
+      if (partitioned) writer.partitionBy("event_year", "event_month", "event_day") else writer
+    }
     bronze
   }
-
-  /** Start a memory-sink append query with the state-store partition
-    * override scoped to the start (see [[runStatefulAgg]] for why state
-    * partitions track key cardinality, not core count).
-    */
-  private def startMemorySink(
-      spark: SparkSession,
-      out: DataFrame,
-      queryName: String,
-      checkpoint: String,
-      statePartitions: Int): org.apache.spark.sql.streaming.StreamingQuery =
-    // Sentinel-driven flushes emit final windows in a NO-DATA micro-batch
-    // (the watermark advances after the sentinel batch commits). That
-    // batch only runs when noDataMicroBatches is enabled — pin it, don't
-    // assume the session default survived caller config.
-    withScopedConf(
-      spark,
-      Seq(
-        "spark.sql.shuffle.partitions" -> statePartitions.toString,
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "true")) {
-      out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
 
   /** Stream-static join: enrich a stream against a static (batch)
     * dimension — stateless, no watermark needed; the static side is
@@ -255,15 +287,8 @@ object StreamJobs {
       joinCols: Seq[String],
       project: DataFrame => DataFrame,
       workDir: String): DataFrame = {
-    val checkpoint = dir(workDir, s"checkpoint-sstatic-${java.util.UUID.randomUUID()}")
-    val queryName = s"sstatic_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val stream = spark.readStream.schema(sourceSchema).parquet(sourceDir)
-    val joined = project(
-      stream.join(org.apache.spark.sql.functions.broadcast(staticDim), joinCols, "left"))
-    val q = startMemorySink(spark, joined, queryName, checkpoint, statePartitions = 8)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    memorySink(spark, project(stream.join(broadcast(staticDim), joinCols, "left")), workDir, "sstatic")
   }
 
   /** foreachBatch transform sink: apply an arbitrary BATCH transform —
@@ -284,8 +309,7 @@ object StreamJobs {
       sourceSchema: StructType,
       transform: DataFrame => DataFrame,
       workDir: String): DataFrame = {
-    val checkpoint = dir(workDir, s"checkpoint-febt-${java.util.UUID.randomUUID()}")
-    val out = dir(workDir, s"febt-out-${java.util.UUID.randomUUID()}")
+    val out = dir(workDir, s"febt-out-${UUID.randomUUID()}")
     val stream = spark.readStream.schema(sourceSchema).parquet(sourceDir)
     // foreachBatch is AT-LEAST-ONCE: a micro-batch that fails after a
     // partial write is re-delivered on restart, and a plain append sink
@@ -294,18 +318,13 @@ object StreamJobs {
     // attempt, and a batch whose _SUCCESS marker already exists is a
     // committed replay and is skipped (the same idempotence the memory-
     // sink runners get from the sink itself).
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    drain(spark, stream, checkpoint(workDir, "febt"))(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val dest = new java.io.File(out, s"b$batchId")
         if (!new java.io.File(dest, "_SUCCESS").exists()) {
           transform(batch).write.mode("overwrite").parquet(dest.toString)
         }
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    })
     // empty source → foreachBatch never fired → no committed batch dirs
     // and schema inference would throw; derive the result schema by
     // applying the transform to an empty batch instead (the sibling
@@ -315,8 +334,7 @@ object StreamJobs {
     val batchDirs = Option(new java.io.File(out).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && new java.io.File(f, "_SUCCESS").exists())
     if (batchDirs.nonEmpty) spark.read.parquet(batchDirs.map(_.toString): _*)
-    else transform(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sourceSchema)).limit(0)
+    else transform(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sourceSchema)).limit(0)
   }
 
   /** Stateless streaming transform: stream the source, apply a pure
@@ -334,50 +352,29 @@ object StreamJobs {
       sourceSchema: StructType,
       transform: DataFrame => DataFrame,
       workDir: String): DataFrame = {
-    val checkpoint = dir(workDir, s"checkpoint-stateless-${java.util.UUID.randomUUID()}")
-    val queryName = s"stateless_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val stream = spark.readStream.schema(sourceSchema).parquet(sourceDir)
-    val q = startMemorySink(spark, transform(stream), queryName, checkpoint, statePartitions = 8)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    memorySink(spark, transform(stream), workDir, "stateless")
   }
 
-  /** Hop 2 — stateful streaming aggregation (S4+A1+P12+K3) driven to a
-    * deterministic fixpoint.
+  /** Hop 2 — generic runner for watermarked stateful aggregations in
+    * append mode (S4+A1+P12+K3; [[Candles.candles]] is the reference's
+    * aggregation, ohlcv_agg.py:20,47), driven to a deterministic
+    * fixpoint: stream the table dir, apply `agg` to the watermarked
+    * stream, collect through a memory sink, and filter the sentinel's
+    * own key back out.
     *
-    * Streams the bronze table, applies watermark + tumbling-window
-    * candle aggregation in *append* mode (only watermark-finalized
-    * windows are emitted — the reference's exact semantics,
-    * ohlcv_agg.py:20,47). Because append mode withholds trailing
-    * windows forever once data is exhausted, the caller-provided
-    * `pushSentinel` callback must stage one far-future row through the
-    * SAME ingest hop (so it is visible in the bronze commit log); the
-    * watermark then passes every real window and flushes them. The
-    * sentinel's own never-finalized window is filtered from the result.
-    */
-  def runWindowedAgg(
-      spark: SparkSession,
-      bronzeDir: String,
-      bronzeSchema: StructType,
-      tsCol: String,
-      idCol: String,
-      keyCol: String,
-      valueCol: String,
-      workDir: String,
-      pushSentinel: () => Unit,
-      windowDuration: String = "15 minutes",
-      watermarkDelay: String = "1 minutes",
-      sentinelKey: String = "__sentinel__"): DataFrame =
-    runStatefulAgg(
-      spark, bronzeDir, bronzeSchema, tsCol, workDir, pushSentinel,
-      stream => Candles.candles(stream, tsCol, idCol, keyCol, valueCol, windowDuration),
-      keyCol, watermarkDelay, sentinelKey)
-
-  /** Generic driver for watermarked stateful aggregations in append
-    * mode: stream the table dir, apply `agg` to the watermarked stream,
-    * collect through a memory sink, flush trailing state with the
-    * caller's sentinel, and filter the sentinel's own key back out.
+    * Append mode emits only watermark-finalized windows and withholds
+    * trailing windows forever once data is exhausted, so a far-future
+    * sentinel row must pass through the SAME ingest hop (visible in the
+    * bronze commit log) for the watermark to pass every real window.
+    * It is staged upfront by [[runTwoHopStateful]]; `pushSentinel` runs
+    * between the two drain passes for callers that stage it (or late
+    * rows) later. The sentinel's own never-finalized window is filtered
+    * from the result.
+    *
+    * A RocksDB (or any custom) `stateStoreProvider` is pinned into the
+    * query's checkpoint at first start: at real state cardinality the
+    * default in-heap HDFSBackedStateStore is the executor-OOM ceiling.
     */
   def runStatefulAgg(
       spark: SparkSession,
@@ -392,48 +389,18 @@ object StreamJobs {
       sentinelKey: String = "__sentinel__",
       statePartitions: Int = 8,
       stateStoreProvider: Option[String] = None): DataFrame = {
-    val checkpoint = dir(workDir, s"checkpoint-agg-${java.util.UUID.randomUUID()}")
-    val queryName = s"agg_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-
     val stream = spark.readStream.schema(bronzeSchema).parquet(bronzeDir)
-    val out = agg(stream.withWatermark(tsCol, watermarkDelay))
-
-    // State-store count is pinned per query at first start from the
-    // session's shuffle-partition conf. Unlike batch shuffles, it should
-    // be sized to stateful-key cardinality, not core count: every
-    // micro-batch pays per-store commit overhead. Scope the override to
-    // the query start and restore the session conf after.
-    // See startMemorySink: the final windows emit in a no-data batch.
-    // All overrides are captured by the query at start and restored by
-    // withScopedConf so they never leak to later caller code. RocksDB
-    // (or any custom) state store: at real state cardinality the default
-    // in-heap HDFSBackedStateStore is the executor-OOM ceiling; the
-    // provider is pinned into the query's checkpoint at first start.
-    val overrides = Seq(
-      "spark.sql.shuffle.partitions" -> statePartitions.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") ++
-      stateStoreProvider.map("spark.sql.streaming.stateStore.providerClass" -> _)
-    val q = withScopedConf(spark, overrides) {
-      out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try {
-      q.processAllAvailable() // all real micro-batches (incl. upfront-staged sentinel)
-      pushSentinel() // optional second staging pass (legacy two-pass callers)
-      // The flush batch is a no-data micro-batch that runs AFTER the last
-      // data batch commits its watermark. A second processAllAvailable
-      // observes it even if the first returned before the flush ran.
-      q.processAllAvailable()
-    } finally q.stop()
-
+    // The flush batch is a no-data micro-batch that runs AFTER the last
+    // data batch commits its watermark. The second pass observes it even
+    // if the first returned before the flush ran.
+    val out = memorySink(
+      spark, agg(stream.withWatermark(tsCol, watermarkDelay)), workDir, "agg",
+      Seq(shufflePartitions(statePartitions), noDataBatches) ++ stateStoreProvider.map(stateStore),
+      Passes(2, pushSentinel))
     // null-safe inequality: `=!=` is null-killing, so a NULL group key
     // would silently vanish from the result while the batch oracle
     // keeps the null-key group — only the literal sentinel row drops
-    spark.table(queryName).filter(!(col(sentinelFilterCol) <=> lit(sentinelKey)))
+    out.filter(!(col(sentinelFilterCol) <=> lit(sentinelKey)))
   }
 
   /** Stream-stream inner join with event-time bounds: two streams over
@@ -457,18 +424,41 @@ object StreamJobs {
       project: DataFrame => DataFrame,
       workDir: String,
       watermarkDelay: String = "1 minutes"): DataFrame =
-    runStreamStreamJoinImpl(
+    streamStreamJoin(
       spark, sourceDir, schema, tsCol, leftFilter, rightFilter, keyCol,
-      rangeCondition, project, workDir, watermarkDelay,
-      joinType = "inner", sentinel = None)
+      rangeCondition, project, workDir, watermarkDelay, "inner")
 
-  /** The one stream-stream join driver both public shapes share: the
-    * side builder, watermarking, qualifier-scoped projection and
-    * memory-sink plumbing differ only in join type and the outer
-    * variant's sentinel pass (watermark advancement so unmatched left
-    * rows EMIT — see [[runStreamStreamJoinOuter]]).
+  /** Stream-stream LEFT OUTER join: like [[runStreamStreamJoin]] but
+    * unmatched left rows must also emit — which can only happen once
+    * the watermark proves no future right row can match. The caller
+    * stages far-future sentinel rows (passing BOTH side filters, so
+    * both per-stream watermarks advance) with the real data: both
+    * watermarks derive from the first batch's max event time, so the
+    * NULL-padded rows emit in a later batch, which the second drain pass
+    * observes. Sentinel-keyed output is filtered back out via
+    * `sentinelPred`.
     */
-  private def runStreamStreamJoinImpl(
+  def runStreamStreamJoinOuter(
+      spark: SparkSession,
+      sourceDir: String,
+      schema: StructType,
+      tsCol: String,
+      leftFilter: org.apache.spark.sql.Column,
+      rightFilter: org.apache.spark.sql.Column,
+      keyCol: String,
+      rangeCondition: (DataFrame, DataFrame) => org.apache.spark.sql.Column,
+      project: DataFrame => DataFrame,
+      sentinelPred: org.apache.spark.sql.Column,
+      workDir: String,
+      watermarkDelay: String = "1 minutes"): DataFrame =
+    streamStreamJoin(
+      spark, sourceDir, schema, tsCol, leftFilter, rightFilter, keyCol,
+      rangeCondition, project, workDir, watermarkDelay, "left_outer").filter(!sentinelPred)
+
+  /** The stream-stream join both public shapes share; the outer join
+    * drains twice so the watermark-released NULL-padded rows emit.
+    */
+  private def streamStreamJoin(
       spark: SparkSession,
       sourceDir: String,
       schema: StructType,
@@ -480,12 +470,7 @@ object StreamJobs {
       project: DataFrame => DataFrame,
       workDir: String,
       watermarkDelay: String,
-      joinType: String,
-      sentinel: Option[(() => Unit, org.apache.spark.sql.Column)]): DataFrame = {
-    val tag = if (joinType == "inner") "ssjoin" else "ssouter"
-    val checkpoint = dir(workDir, s"checkpoint-$tag-${java.util.UUID.randomUUID()}")
-    val queryName = s"${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-
+      joinType: String): DataFrame = {
     def side(f: org.apache.spark.sql.Column, alias: String): DataFrame =
       spark.readStream
         .schema(schema)
@@ -500,18 +485,9 @@ object StreamJobs {
     // sink flattens the join output into positional duplicate columns
     val joined = project(
       l.join(r, col(s"l.$keyCol") === col(s"r.$keyCol") && rangeCondition(l, r), joinType))
-
-    val q = startMemorySink(spark, joined, queryName, checkpoint, statePartitions = 8)
-    try {
-      q.processAllAvailable()
-      sentinel.foreach { case (push, _) =>
-        push() // advance both watermarks past every real row
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    sentinel.fold(spark.table(queryName)) { case (_, pred) =>
-      spark.table(queryName).filter(!pred)
-    }
+    val inner = joinType == "inner"
+    memorySink(spark, joined, workDir, if (inner) "ssjoin" else "ssouter",
+      waitFor = Passes(if (inner) 1 else 2))
   }
 
   /** Typed row for the custom-state demo pipeline. */
@@ -530,6 +506,54 @@ object StreamJobs {
     */
   final case class RunningMax(k: String, running_max: Double, updates: Long)
 
+  /** The running-max fold both custom-state runners share, so their
+    * outputs cannot drift apart. Kept off the StreamJobs object: a state
+    * function that calls a StreamJobs method captures the object, which
+    * is not serializable.
+    */
+  object RunningMax {
+    private[streaming] def zero(k: String): RunningMax = RunningMax(k, Double.MinValue, 0L)
+
+    /** One micro-batch's update: fold in the batch max, count the batch. */
+    private[streaming] def step(prev: RunningMax, rows: Seq[KeyedValue]): RunningMax =
+      RunningMax(
+        prev.k,
+        math.max(prev.running_max, rows.map(_.v).foldLeft(Double.MinValue)(math.max)),
+        prev.updates + 1)
+  }
+
+  /** The one `transformWithState` processor: per key and micro-batch,
+    * sort the rows by event time (then `order`'s id), fold them with
+    * `step` into one `ValueState` seeded from `zero`, and emit the new
+    * state.
+    */
+  private final class FoldProcessor[K, V, S](
+      stateName: String,
+      enc: Encoder[S],
+      zero: K => S,
+      order: V => (java.sql.Timestamp, Long),
+      step: (S, Seq[V]) => S) extends StatefulProcessor[K, V, S] {
+    @transient private var state: ValueState[S] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[S](stateName, enc, TTLConfig.NONE)
+    override def handleInputRows(key: K, rows: Iterator[V], timerValues: TimerValues): Iterator[S] = {
+      // FULL-precision time order: getTime truncates to milliseconds,
+      // but the batch oracles sort struct(ts, …) at microsecond
+      // precision (Testdata events carry micros) — same-millisecond
+      // events must fold in the same order or order-sensitive state
+      // (EWMA) diverges from the batch hash. getNanos carries the
+      // full sub-second fraction, so (getTime, getNanos, id) is total
+      // and consistent with Spark's timestamp ordering.
+      val sorted = rows.toVector.sortBy { r =>
+        val (ts, id) = order(r)
+        (ts.getTime, ts.getNanos.toLong, id)
+      }
+      val next = step(Option(state.get()).getOrElse(zero(key)), sorted)
+      state.update(next)
+      Iterator.single(next)
+    }
+  }
+
   /** Custom keyed state via `flatMapGroupsWithState` (the API for
     * semantics the built-in window aggregations can't express —
     * SURVEY §2.9 notes the reference never needs it; provided as
@@ -542,43 +566,23 @@ object StreamJobs {
       spark: SparkSession,
       sourceDir: String,
       workDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val checkpoint = dir(workDir, s"checkpoint-fmgws-${java.util.UUID.randomUUID()}")
-    val queryName = s"fmgws_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-
     def update(
         key: String,
         rows: Iterator[KeyedValue],
         state: GroupState[RunningMax]): Iterator[RunningMax] = {
-      val batchMax = rows.map(_.v).foldLeft(Double.MinValue)(math.max)
-      val prev = state.getOption.getOrElse(RunningMax(key, Double.MinValue, 0L))
-      val next = RunningMax(key, math.max(prev.running_max, batchMax), prev.updates + 1)
+      val next = RunningMax.step(state.getOption.getOrElse(RunningMax.zero(key)), rows.toSeq)
       state.update(next)
       Iterator.single(next)
     }
-
     val stream = spark.readStream
       .schema(keyedValueSchema)
       .parquet(sourceDir)
       .as[KeyedValue]
       .groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-
-    // state-partition policy (see runStatefulAgg): stateful shuffles
-    // size to key cardinality, not core count — 200 default stores per
-    // micro-batch is pure commit overhead for a handful of keys
-    val q = withScopedConf(spark, Seq("spark.sql.shuffle.partitions" -> "8")) {
-      stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    memorySink(spark, stream.toDF(), workDir, "fmgws", Seq(shufflePartitions(8)))
   }
 
   /** [[runRunningMaxWithState]]'s semantics on Spark 4's
@@ -588,60 +592,26 @@ object StreamJobs {
     * one `ValueState[RunningMax]`), per-variable TTL, timers, and
     * independent state evolution. The API requires the RocksDB state
     * store provider, which is also the right store for state at scale
-    * — pinned here for the query's lifetime via the same scoped-conf
-    * pattern as [[runStatefulAgg]]. StreamingStateSpec pins output
-    * parity with the flatMapGroupsWithState form.
+    * — pinned for the query's lifetime by [[drain]]'s scoped conf.
+    * StreamingStateSpec pins output parity with the
+    * flatMapGroupsWithState form.
     */
   def runRunningMaxTransformWithState(
       spark: SparkSession,
       sourceDir: String,
       workDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
     import spark.implicits._
-    val checkpoint = dir(workDir, s"checkpoint-tws-${java.util.UUID.randomUUID()}")
-    val queryName = s"tws_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-
-    class RunningMaxProcessor extends StatefulProcessor[String, KeyedValue, RunningMax] {
-      @transient private var state: ValueState[RunningMax] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[RunningMax](
-          "runningMax", Encoders.product[RunningMax], TTLConfig.NONE)
-      override def handleInputRows(
-          key: String,
-          rows: Iterator[KeyedValue],
-          timerValues: TimerValues): Iterator[RunningMax] = {
-        val batchMax = rows.map(_.v).foldLeft(Double.MinValue)(math.max)
-        val prev = Option(state.get()).getOrElse(RunningMax(key, Double.MinValue, 0L))
-        val next = RunningMax(key, math.max(prev.running_max, batchMax), prev.updates + 1)
-        state.update(next)
-        Iterator.single(next)
-      }
-    }
-
     val stream = spark.readStream
       .schema(keyedValueSchema)
       .parquet(sourceDir)
       .as[KeyedValue]
       .groupByKey(_.k)
-      .transformWithState(new RunningMaxProcessor, TimeMode.None(), OutputMode.Append())
-
-    val q = withScopedConf(
-      spark,
-      Seq(
-        // state-partition policy (see runStatefulAgg): 8 stores, not 200
-        "spark.sql.shuffle.partitions" -> "8",
-        "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider)) {
-      stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+      .transformWithState(
+        new FoldProcessor[String, KeyedValue, RunningMax](
+          "runningMax", Encoders.product[RunningMax], RunningMax.zero, r => (r.ts, 0L),
+          RunningMax.step),
+        TimeMode.None(), OutputMode.Append())
+    memorySink(spark, stream.toDF(), workDir, "tws", Seq(shufflePartitions(8), rocksDb))
   }
 
   final case class EwmaEvent(user_id: Long, ts: java.sql.Timestamp, event_id: Long, value: Double)
@@ -673,65 +643,17 @@ object StreamJobs {
       schema: StructType,
       checkpoint: String,
       outDir: String): Unit = {
-    import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
     import spark.implicits._
-
-    class EwmaProcessor extends StatefulProcessor[Long, EwmaEvent, EwmaState] {
-      @transient private var state: ValueState[EwmaState] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[EwmaState](
-          "ewma", Encoders.product[EwmaState], TTLConfig.NONE)
-      override def handleInputRows(
-          key: Long,
-          rows: Iterator[EwmaEvent],
-          timerValues: TimerValues): Iterator[EwmaState] = {
-        // FULL-precision time order: getTime truncates to milliseconds,
-        // but the batch oracles sort struct(ts, …) at microsecond
-        // precision (Testdata events carry micros) — same-millisecond
-        // events must fold in the same order or order-sensitive state
-        // (EWMA) diverges from the batch hash. getNanos carries the
-        // full sub-second fraction, so (getTime, getNanos, id) is total
-        // and consistent with Spark's timestamp ordering.
-        val sorted = rows.toVector
-          .sortBy(e => (e.ts.getTime, e.ts.getNanos.toLong, e.event_id))
-        val prev = Option(state.get())
-        val next = sorted.foldLeft(
-          prev.getOrElse(EwmaState(key, 0L, 0.0))) { (acc, e) =>
-          val ewma = if (acc.n_events == 0L) e.value else 0.5d * e.value + 0.5d * acc.ewma
-          EwmaState(key, acc.n_events + 1, ewma)
-        }
-        state.update(next)
-        Iterator.single(next)
-      }
-    }
-
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
+    val events = spark.readStream.schema(schema).parquet(sourceDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[EwmaEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new EwmaProcessor, TimeMode.None(), OutputMode.Append())
-
-    val q = withScopedConf(
-      spark,
-      Seq(
-        // state-partition policy (see runStatefulAgg): 8 stores, not 200
-        "spark.sql.shuffle.partitions" -> "8",
-        "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider)) {
-      // foreachBatch, not a memory sink: the second wave's run RESUMES
-      // from the checkpoint, which the memory sink refuses to do
-      stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[EwmaState], _: Long) =>
-          batch.write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
+    foldWaves(spark, events.groupByKey(_.user_id), checkpoint, outDir,
+      new FoldProcessor[Long, EwmaEvent, EwmaState](
+        "ewma", Encoders.product[EwmaState], EwmaState(_, 0L, 0.0), e => (e.ts, e.event_id),
+        (prev, rows) => rows.foldLeft(prev) { (acc, e) =>
+          val ewma = if (acc.n_events == 0L) e.value else 0.5d * e.value + 0.5d * acc.ewma
+          EwmaState(acc.user_id, acc.n_events + 1, ewma)
+        }))
   }
 
   final case class FunnelEvent(
@@ -756,31 +678,17 @@ object StreamJobs {
       schema: StructType,
       checkpoint: String,
       outDir: String): Unit = {
-    import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
     import spark.implicits._
     val sent = 4102444800L
-
-    class FunnelProcessor extends StatefulProcessor[Long, FunnelEvent, FunnelState] {
-      @transient private var state: ValueState[FunnelState] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[FunnelState](
-          "funnel", Encoders.product[FunnelState], TTLConfig.NONE)
-      override def handleInputRows(
-          key: Long,
-          rows: Iterator[FunnelEvent],
-          timerValues: TimerValues): Iterator[FunnelState] = {
-        // FULL-precision time order: getTime truncates to milliseconds,
-        // but the batch oracles sort struct(ts, …) at microsecond
-        // precision (Testdata events carry micros) — same-millisecond
-        // events must fold in the same order or order-sensitive state
-        // (EWMA) diverges from the batch hash. getNanos carries the
-        // full sub-second fraction, so (getTime, getNanos, id) is total
-        // and consistent with Spark's timestamp ordering.
-        val sorted = rows.toVector
-          .sortBy(e => (e.ts.getTime, e.ts.getNanos.toLong, e.event_id))
-        val prev = Option(state.get()).getOrElse(FunnelState(key, 0L, sent, sent, sent))
-        val next = sorted.foldLeft(prev) { (acc, e) =>
+    val events = spark.readStream.schema(schema).parquet(sourceDir)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .filter(col("event_type").isin("signup", "click", "purchase"))
+      .as[FunnelEvent]
+    foldWaves(spark, events.groupByKey(_.user_id), checkpoint, outDir,
+      new FoldProcessor[Long, FunnelEvent, FunnelState](
+        "funnel", Encoders.product[FunnelState], FunnelState(_, 0L, sent, sent, sent),
+        e => (e.ts, e.event_id),
+        (prev, rows) => rows.foldLeft(prev) { (acc, e) =>
           val t = e.ts.getTime / 1000L // second truncation = the batch fold's unix_timestamp
           val upd = e.event_type match {
             case "signup" if acc.s == sent => acc.copy(s = t)
@@ -789,64 +697,29 @@ object StreamJobs {
             case _ => acc
           }
           upd.copy(n = acc.n + 1)
-        }
-        state.update(next)
-        Iterator.single(next)
-      }
-    }
-
-    val stream = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .filter(col("event_type").isin("signup", "click", "purchase"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor, TimeMode.None(), OutputMode.Append())
-
-    val q = withScopedConf(
-      spark,
-      Seq(
-        // state-partition policy (see runStatefulAgg): 8 stores, not 200
-        "spark.sql.shuffle.partitions" -> "8",
-        "spark.sql.streaming.stateStore.providerClass" -> rocksDbProvider)) {
-      stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[FunnelState], _: Long) =>
-          batch.write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", checkpoint)
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
+        }))
   }
 
-  /** Stream-stream LEFT OUTER join: like [[runStreamStreamJoin]] but
-    * unmatched left rows must also emit — which can only happen once
-    * the watermark proves no future right row can match, so the caller
-    * appends far-future sentinel rows (passing BOTH side filters, so
-    * both per-stream watermarks advance) after the real data drains.
-    * Sentinel-keyed output is filtered back out via `sentinelPred`.
+  /** The runner body EWMA and funnel share: run `processor` over the
+    * per-user groups on the RocksDB store (which `transformWithState`
+    * requires) and append each batch's emitted states to `outDir`.
+    * foreachBatch, not a memory sink: the second wave's run RESUMES from
+    * the caller's checkpoint, which the memory sink refuses to do.
     */
-  def runStreamStreamJoinOuter(
+  private def foldWaves[V, S: Encoder](
       spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      tsCol: String,
-      leftFilter: org.apache.spark.sql.Column,
-      rightFilter: org.apache.spark.sql.Column,
-      keyCol: String,
-      rangeCondition: (DataFrame, DataFrame) => org.apache.spark.sql.Column,
-      project: DataFrame => DataFrame,
-      pushSentinels: () => Unit,
-      sentinelPred: org.apache.spark.sql.Column,
-      workDir: String,
-      watermarkDelay: String = "1 minutes"): DataFrame =
-    runStreamStreamJoinImpl(
-      spark, sourceDir, schema, tsCol, leftFilter, rightFilter, keyCol,
-      rangeCondition, project, workDir, watermarkDelay,
-      joinType = "left_outer", sentinel = Some((pushSentinels, sentinelPred)))
+      events: org.apache.spark.sql.KeyValueGroupedDataset[Long, V],
+      checkpoint: String,
+      outDir: String,
+      processor: FoldProcessor[Long, V, S]): Unit =
+    drain(
+      spark,
+      events.transformWithState(processor, TimeMode.None(), OutputMode.Append()).toDF(),
+      checkpoint,
+      Seq(shufflePartitions(8), rocksDb))(
+      _.outputMode("append").foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(outDir)
+      })
 
   /** Streaming exact dedup (training-data pipeline on a stream): drop
     * duplicate keys arriving within the watermark horizon —
@@ -863,20 +736,12 @@ object StreamJobs {
       keyCols: Seq[String],
       workDir: String,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    // checkpoint UUID'd like every other memory-sink helper here: the
-    // sink table is fresh per call, so resuming offsets from a previous
-    // call's checkpoint would silently omit already-processed rows
-    val checkpoint = dir(workDir, s"checkpoint-dedup-${java.util.UUID.randomUUID()}")
-    val queryName = s"dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val stream = spark.readStream
       .schema(schema)
       .parquet(sourceDir)
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-    val q = startMemorySink(spark, stream, queryName, checkpoint, statePartitions = 8)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
+    memorySink(spark, stream, workDir, "dedup")
   }
 
   /** Streaming corpus ingest with dedup against the lake: each
@@ -911,15 +776,12 @@ object StreamJobs {
       textCol: String,
       table: graft.tables.LakeTable,
       workDir: String): Unit = {
-    val checkpoint = dir(workDir, "checkpoint-dedup-ingest")
-    val q = spark.readStream
+    val stream = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", Int.MaxValue)
       .parquet(sourceDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    drain(spark, stream, dir(workDir, "checkpoint-dedup-ingest"), waitFor = AvailableNow)(
+      _.outputMode("append").foreachBatch { (batch: DataFrame, _: Long) =>
         val withFp = batch.withColumn(
           "fp", graft.ext.TextAnalysis.fingerprintMd5(col(textCol)))
         val fresh =
@@ -930,13 +792,10 @@ object StreamJobs {
         // O(index) corpus anti-join and the batch fingerprinting run
         // TWICE per micro-batch (once for isEmpty, once inside append)
         fresh.persist()
-        try { if (!fresh.isEmpty) { table.append(fresh); () } }
-        finally { fresh.unpersist(blocking = false); () }
+        try { if (!fresh.isEmpty) table.append(fresh) }
+        finally { fresh.unpersist(blocking = false) }
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
   }
 
   /** Streaming append into a lake table with EXACTLY-ONCE table state
@@ -973,18 +832,11 @@ object StreamJobs {
     val reader = spark.readStream.schema(schema)
     val withCap = maxFilesPerTrigger.fold(reader)(n =>
       reader.option("maxFilesPerTrigger", n.toString))
-    val q = withCap
-      .parquet(sourceDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    drain(spark, withCap.parquet(sourceDir), checkpoint, waitFor = AvailableNow)(
+      _.outputMode("append").foreachBatch { (batch: DataFrame, batchId: Long) =>
         table.append(batch, txn = Some((id, batchId)))
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
   }
 
   /** Streaming upsert into a lakehouse table: each micro-batch is
@@ -1001,22 +853,12 @@ object StreamJobs {
       keyCols: Seq[String],
       table: graft.tables.LakeTable,
       workDir: String): Unit = {
-    val checkpoint = dir(workDir, "checkpoint-upsert")
-    val q = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.tables.Merge.mergeScd1(table, batch, keyCols)
-        }
+    val stream = spark.readStream.schema(schema).parquet(sourceDir)
+    drain(spark, stream, dir(workDir, "checkpoint-upsert"), waitFor = AvailableNow)(
+      _.outputMode("append").foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) graft.tables.Merge.mergeScd1(table, batch, keyCols)
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
   }
 
   /** The full two-hop pipeline on a batch input, end to end: stage →
@@ -1069,8 +911,7 @@ object StreamJobs {
     // max(ts); ride it on the staging write job via observe — one pass
     // over the input, not a separate full-scan aggregation first (at
     // corpus scale the second scan is the dominant cost of this hop).
-    val obs = new org.apache.spark.sql.Observation(
-      s"stage-max-${java.util.UUID.randomUUID()}")
+    val obs = new org.apache.spark.sql.Observation(s"stage-max-${UUID.randomUUID()}")
     stageEnvelope(input.observe(obs, max(col(tsCol)).as("maxTs")), Seq(keyCol, idCol), stage)
     val maxTs = scala.concurrent.Await
       .result(obs.future, scala.concurrent.duration.Duration(60, "seconds"))

@@ -123,6 +123,15 @@ class ParitySpec extends SparkSpec {
     }
   }
 
+  test("SortedPairs sizes its output as a Long and names n past the array bound") {
+    // Int arithmetic went negative here: 46,342 * 46,341 > Int.MaxValue
+    assert(VectorExprs.SortedPairs.pairCount(46342) == 46342L * 46341 / 2)
+    assert(VectorExprs.SortedPairs.pairCount(65536) == 65536L * 65535 / 2)
+    val e = intercept[IllegalArgumentException](VectorExprs.SortedPairs.pairCount(65537))
+    assert(e.getMessage.contains("65537"), e.getMessage)
+    assert(VectorExprs.SortedPairs.pairCount(2) == 1 && VectorExprs.SortedPairs.pairCount(0) == 0)
+  }
+
   test("compiled SortedPairs matches the nested transform/slice HOF, pairs and order") {
     val rnd = new scala.util.Random(51)
     val data = (1 to 30).map(_ =>
