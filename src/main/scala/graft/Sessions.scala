@@ -2,39 +2,31 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** The one session factory: every `SparkSession` in the engine, its
+  * tools and its tests is built here, so Bench, the profilers and the
+  * suites all plan queries under the same configuration.
   *
-  * Defaults tuned for the harness's local[32] / 128 GiB box, but every
-  * knob here is the same one you'd set on a 1000-executor cluster:
-  * AQE on (runtime re-plan, skew-join splitting, partition coalescing),
-  * shuffle partitions sized to the parallelism actually available, and a
-  * UTC session so timestamp semantics don't depend on where the driver
-  * runs (the reference forces `Asia/Ho_Chi_Minh` per session —
-  * /root/reference/src/bronze/ohlcv_1m.py:30 — so the TZ is a parameter
-  * here, not a constant).
+  * Shuffle partitions equal the core count; the session time zone is
+  * UTC so timestamp semantics don't depend on where the driver runs.
+  * Everything else (AQE, partition coalescing, skew-join splitting)
+  * is left at Spark's defaults. The engine's extensions are installed
+  * once, at build time, through [[graft.plans.GraftExtensions]]; on a
+  * cluster the same thing ships as
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object Sessions {
   def local(
       cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-      timeZone: String = "UTC",
       appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .withExtensions(new graft.plans.GraftExtensions)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", timeZone)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // engine extensions (compiled SQL functions + HOF strength-reduction
-    // rule); on a cluster the same thing ships as
-    // spark.sql.extensions=graft.plans.GraftExtensions
-    graft.plans.GraftExtensions.install(spark)
     spark
   }
 

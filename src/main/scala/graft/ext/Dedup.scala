@@ -460,6 +460,13 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, sorted: Column): Column =
     graft.functions.VectorExprs.sortedPairs(spark, sorted, "id_a", "id_b")
 
+  /** Input size above which [[minhashDedupPairs]] persists the verify
+    * shingle sets: 10 MiB, Spark's default broadcast threshold. A
+    * constant rather than that setting, so raising or disabling the
+    * broadcast threshold cannot switch the cache on or off.
+    */
+  private[ext] val VerifyPersistBytes: Long = 10L * 1024 * 1024
+
   /** End-to-end MinHash+LSH near-dup detection: candidates from LSH,
     * verified with exact shingle Jaccard ≥ `threshold`.
     */
@@ -484,23 +491,20 @@ object Dedup {
         .shingleHashes(spark, split(trim(lower(col(textCol))), "\\s+"), shingleN, Long.MaxValue)
         .as("sh"))
     // The hashed frame feeds BOTH verify joins. SIZE-GATED persist (the
-    // MERGE probe's r21 lesson, applied here after the driver measured
-    // the unconditional persist 0.89× at bench scale): below the
-    // session broadcast threshold the corpus is small enough that
-    // re-running the compiled shingle pass per side is cheaper than the
-    // cache write + columnar encode of the shingle arrays; past it the
-    // corpus-sized pass dominates and sharing wins. The gate reads the
-    // optimizer's own size estimate of the input subtree — no job runs.
+    // MERGE probe's r21 lesson, applied here after the unconditional
+    // persist measured 0.89× at bench scale): below VerifyPersistBytes
+    // the corpus is small enough that re-running the compiled shingle
+    // pass per side is cheaper than the cache write + columnar encode of
+    // the shingle arrays; past it the corpus-sized pass dominates and
+    // sharing wins. The gate reads the optimizer's own size estimate of
+    // the input subtree — no job runs.
     // NOTE on lifetime (r21 ADVICE): the CacheManager holds persisted
     // plans strongly (ContextCleaner only reclaims unreachable RDDs,
     // which registered plans never are), so when the gate fires the
     // cached frame lives until the caller clears it — the bench's
     // resetSharedState / spark.catalog.clearCache(), or an explicit
     // unpersist by a library caller that loops over corpora.
-    val persistPays = {
-      val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
-      thr <= 0 || df.queryExecution.optimizedPlan.stats.sizeInBytes > thr
-    }
+    val persistPays = df.queryExecution.optimizedPlan.stats.sizeInBytes > VerifyPersistBytes
     val hashed =
       if (persistPays)
         hashedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -86,17 +86,12 @@ object LakeBroadcastHint extends Rule[LogicalPlan] {
     case SubqueryAlias(_, c) => scanBytes(c)
     case Project(_, c) => scanBytes(c)
     case Filter(_, c) => scanBytes(c)
-    // pre-pushdown shape (injectOptimizerRule runs in the operator batch)
+    // injected rules run in the operator batch, before V2 scan pushdown,
+    // so a catalog scan is still its DataSourceV2Relation here
     case r: DataSourceV2Relation => r.table match {
       case t: graft.tables.v2.GraftSqlTable => Some(t.sizeAtMost(conf.autoBroadcastJoinThreshold))
       case _ => None
     }
-    // post-pushdown shape (extraOptimizations run after all default batches)
-    case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-      s.relation.table match {
-        case t: graft.tables.v2.GraftSqlTable => Some(t.sizeAtMost(conf.autoBroadcastJoinThreshold))
-        case _ => None
-      }
     case _ => None
   }
 
@@ -118,9 +113,11 @@ object LakeBroadcastHint extends Rule[LogicalPlan] {
 /** `SparkSessionExtensions` entry point — preference order (c) of the
   * build rules: engine behavior injected at session build time via
   * {{{ spark.sql.extensions=graft.plans.GraftExtensions }}}
-  * (or `builder.withExtensions(new GraftExtensions)`). Registers the
-  * compiled vector functions as SQL-visible builtins and installs the
-  * HOF strength-reduction optimizer rule.
+  * (or `builder.withExtensions(new GraftExtensions)`, as
+  * [[graft.Sessions.local]] does for every session). Registers the
+  * compiled vector functions as SQL-visible builtins, the three
+  * optimizer rules and the MERGE parser. Extensions apply only when a
+  * session is built, so there is no path that installs them later.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -159,23 +156,4 @@ object GraftExtensions {
     "graft_simhash64" -> arity("graft_simhash64", 1)(e => VectorExprs.SimHash64(e.head)),
     "graft_bloom_might_contain" -> arity("graft_bloom_might_contain", 2)(e =>
       VectorExprs.BloomMightContain(e(0), e(1))))
-
-  /** Install on an ALREADY-BUILT session (tests, notebooks):
-    * `experimental.extraOptimizations` for the rule, temp-function
-    * registry for the SQL functions. Idempotent.
-    */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(HofDotStrengthReduction)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ HofDotStrengthReduction
-    }
-    if (!spark.experimental.extraOptimizations.contains(LakeBroadcastHint)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LakeBroadcastHint
-    }
-    functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, exprs => builder(exprs), "scala_udf")
-    }
-  }
 }

@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Scratch diagnostic: per-Spark-job wall times for one `SparkEntry`
   * query — where a multi-action operator (iterative loop, staged write,
@@ -13,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object JobProf {
   def main(args: Array[String]): Unit = {
     val Array(q, sfDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = graft.Sessions.local()
     spark.read.parquet(s"$sfDir/${graft.Bench.probeTable(sfDir).getOrElse("nation")}.parquet").count()
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

@@ -343,6 +343,22 @@ class DedupSpec extends SparkSpec {
       .foreach(r => assert(r.getAs[Double]("jaccard") > 0.8))
   }
 
+  test("minhash verify persist is gated on input size, not the broadcast threshold") {
+    def pairs() = Dedup.minhashDedupPairs(corpus, "id", "text", 0.5).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val want = pairs()
+    spark.catalog.clearCache()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val got = pairs()
+      // a small corpus stays uncached even with broadcast disabled
+      assert(spark.sharedState.cacheManager.isEmpty)
+      assert(got == want)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("containment catches an embedded quote that Jaccard misses; direction is smaller-in-larger") {
     val quote = "the quick brown fox jumps over the lazy dog tonight"
     // diverse filler (unique tokens) so the page's DISTINCT shingle set

@@ -8,8 +8,6 @@ import graft.ext.Similarity
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def installed(): Unit = GraftExtensions.install(spark)
-
   /** Round-trip through parquet so ConvertToLocalRelation can't fold the
     * whole plan before the rewrite is visible.
     */
@@ -20,7 +18,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("HOF dot product strength-reduces to the compiled ArrayDot, bit-identical result") {
-    installed()
     val df = viaParquet(
       Seq(
         (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
@@ -37,7 +34,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("rewrite preserves zip_with NULL semantics: unequal lengths and NULL elements") {
-    installed()
     val df = viaParquet(
       Seq(
         (Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](1.0)),       // unequal -> NULL
@@ -56,7 +52,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("float arrays: exact-widening casts are stripped into the compiled loop") {
-    installed()
     val df = viaParquet(Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b"), "ext-float")
     val ad = transform(col("a"), x => x.cast("double"))
     val bd = transform(col("b"), x => x.cast("double"))
@@ -70,7 +65,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("Similarity.cosine results are unchanged by the rule (bit parity with compiled path)") {
-    installed()
     val rnd = new scala.util.Random(11)
     val df = (0 until 50)
       .map(i => (i.toLong, Array.fill(16)(rnd.nextFloat()).toSeq, Array.fill(16)(rnd.nextFloat()).toSeq))
@@ -85,7 +79,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("SQL-visible functions work after install") {
-    installed()
     val r = spark.sql("SELECT graft_array_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .head().getDouble(0)
     assert(r == 11.0)
